@@ -13,10 +13,15 @@ job per *explosion signature*:
    aggregation, whole-stage codegen, one shuffle of one tiny row.
    Uniqueness rules ride along as ``count``/``count_distinct`` aggregates in
    the same job.
-3. Failing-record samples (≤10 rows, only for rules with 0 < pass_rate < 1,
-   matching rules/base.py:370-388) are collected afterwards with
-   filter+dropDuplicates+limit — Catalyst plans these as CollectLimit with an
-   early stop.
+3. Failing-record samples (≤10 distinct value tuples and ≤10 ids, only for
+   rules that failed somewhere, matching rules/base.py:370-388) are collected
+   afterwards in ONE windowed query over all groups: each failing row is
+   exploded once per sampled rule it fails, deduplicated map-side, and
+   ranked per rule by its value tuple and by its id under a WindowGroupLimit
+   that keeps ≤10 rows per rule and partition before the rule-keyed
+   exchange. Samples are the first distinct tuples and smallest distinct ids
+   in that order, so they are deterministic. Uniqueness rules sample
+   duplicated values with their own grouped query.
 
 At 100 TB this means: one scan of the table per run (not N), parquet column
 pruning down to the union of rule columns, and no Python in the hot path.
@@ -26,7 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from gchq_data_quality_spark.globals import SampleConfig
@@ -78,42 +83,97 @@ def _needs_sample(pass_rate: float | None) -> bool:
     return pass_rate is not None and pass_rate != 1.0
 
 
-def _collect_sample(
-    flat_df: DataFrame, compiled: CompiledRule, row_id_col: str | None
-) -> tuple[list[dict], list | None]:
-    limit = SampleConfig.RECORDS_FAILED_SAMPLE_SIZE
-    rule = compiled.rule
-    if compiled.is_global:
-        # duplicate-value sample (parity: rules/uniqueness.py:151-162)
-        col = compiled.prepared[rule.field]
-        dupes = (
-            flat_df.select(col.alias(rule.field))
-            .filter(F.col(rule.field).isNotNull())
-            .groupBy(rule.field)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(limit)
-            .collect()
-        )
-        return [{rule.field: row[rule.field]} for row in dupes], None
-
-    failing = flat_df.filter(compiled.failing())
-    sample_rows = (
-        failing.select(
-            *[compiled.prepared[c].alias(c) for c in compiled.columns_used]
-        )
-        .dropDuplicates()
-        .limit(limit)
+def _duplicate_sample(flat_df: DataFrame, compiled: CompiledRule) -> list[dict]:
+    """Duplicated values of a uniqueness rule (parity: rules/uniqueness.py:151-162)."""
+    field = compiled.rule.field
+    dupes = (
+        flat_df.select(compiled.prepared[field].alias(field))
+        .filter(F.col(field).isNotNull())
+        .groupBy(field)
+        .count()
+        .filter(F.col("count") > 1)
+        .limit(SampleConfig.RECORDS_FAILED_SAMPLE_SIZE)
         .collect()
     )
-    sample = [row.asDict(recursive=True) for row in sample_rows]
-    ids = None
-    if row_id_col and row_id_col in flat_df.columns:
-        ids = [
-            row[row_id_col]
-            for row in failing.select(row_id_col).limit(limit).collect()
-        ]
-    return sample, ids
+    return [{field: row[field]} for row in dupes]
+
+
+_RULE, _KIND, _RANK = "__dq_rule", "__dq_kind", "__dq_rank"
+
+
+def _collect_samples(
+    views: list[tuple[DataFrame, list[CompiledRule]]], id_col: str | None
+) -> list[tuple[list[dict], list | None]]:
+    """Failing samples and ids of every sampled row rule, in one query.
+
+    Each row is exploded into one row per rule it fails (``__dq_kind`` 0,
+    column ``__dq_v{p}`` = rule ``p``'s prepared values as one positional
+    struct) and, with ``id_col``, one more per rule carrying the id
+    (``__dq_kind`` 1). Dropping duplicates aggregates map-side, so a tuple or
+    id crosses the first exchange at most once per partition. ``row_number()
+    <= limit`` over (rule, kind), ordered by the tuple and the id, then
+    infers a WindowGroupLimit: at most ``limit`` rows per rule, kind and
+    partition cross the second exchange. Samples are the first distinct
+    tuples and the smallest distinct ids. Projections, window and filter are
+    SQL text: each Column operator costs ~10 py4j round trips.
+    """
+    limit = SampleConfig.RECORDS_FAILED_SAMPLE_SIZE
+    ident = ["`" + id_col.replace("`", "``") + "`"] if id_col else []
+    kinds = (0, 1) if id_col else (0,)
+    rules: list[CompiledRule] = []
+    parts = []
+    for flat_df, compiled in views:
+        first = len(rules)
+        rules += compiled
+        ps = range(first, len(rules))
+        codes = ", ".join(
+            f"IF(__dq_e{p} AND NOT coalesce(__dq_p{p}, FALSE), "
+            f"named_struct('{_RULE}', {p}, '{_KIND}', {k}), NULL)"
+            for p in ps for k in kinds
+        )
+        parts.append(
+            flat_df.select(
+                *ident,
+                *[cr.evaluated.alias(f"__dq_e{p}") for p, cr in zip(ps, compiled, strict=True)],
+                *[cr.passing.alias(f"__dq_p{p}") for p, cr in zip(ps, compiled, strict=True)],
+                *[
+                    F.struct(*[cr.prepared[c] for c in cr.columns_used]).alias(f"__dq_s{p}")
+                    for p, cr in zip(ps, compiled, strict=True)
+                ],
+            )
+            .selectExpr("*", f"inline(array_compact(array({codes})))")
+            .selectExpr(
+                _RULE,
+                _KIND,
+                *[f"IF({_KIND} = 0 AND {_RULE} = {p}, __dq_s{p}, NULL) AS __dq_v{p}" for p in ps],
+                *[f"IF({_KIND} = 1, {i}, NULL) AS {i}" for i in ident],
+            )
+        )
+    union = parts[0]
+    for part in parts[1:]:
+        union = union.unionByName(part, allowMissingColumns=True)
+    order = ", ".join([f"__dq_v{p}" for p in range(len(rules))] + ident)
+    rows = (
+        union.dropDuplicates()
+        .selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {_RULE}, {_KIND} ORDER BY {order}) AS {_RANK}"
+        )
+        .filter(f"{_RANK} <= {limit}")
+        .collect()
+    )
+
+    samples: list[list[dict]] = [[] for _ in rules]
+    failed_ids: list[list] = [[] for _ in rules]
+    for row in sorted(rows, key=lambda r: r[_RANK]):
+        p = row[_RULE]
+        if row[_KIND]:
+            failed_ids[p].append(row[id_col])
+        else:
+            named = Row(*rules[p].columns_used)(*row[f"__dq_v{p}"])
+            samples[p].append(named.asDict(recursive=True))
+    return [
+        (s, d if id_col else None) for s, d in zip(samples, failed_ids, strict=True)
+    ]
 
 
 def compute_metrics(
@@ -137,11 +197,13 @@ def compute_metrics(
     for i, rule in enumerate(rules):
         groups.setdefault(explosion_signature(rule.columns_used()), []).append(i)
 
+    keep = [row_id_col] if row_id_col and row_id_col in df.columns else []
     metrics: dict[int, RuleMetrics] = {}
+    to_sample: list[RuleMetrics] = []
+    views: list[tuple[DataFrame, list[CompiledRule]]] = []
     for indices in groups.values():
         group_rules = [rules[i] for i in indices]
         group_cols = sorted({c for r in group_rules for c in r.columns_used()})
-        keep = [row_id_col] if row_id_col and row_id_col in df.columns else []
         flat_df, mapping = flatten(df, group_cols, keep_cols=keep)
         dtypes = {f.name: f.dataType for f in flat_df.schema.fields}
 
@@ -167,16 +229,25 @@ def compute_metrics(
                 )
         row = flat_df.agg(*agg_exprs).collect()[0]
 
+        sampled: list[CompiledRule] = []
         for j, (i, cr) in enumerate(zip(indices, compiled, strict=True)):
             evaluated = int(row[f"e{j}"] or 0)
             passing = int(row[f"p{j}"] or 0)
             pass_rate = calculate_pass_rate(passing, evaluated)
             m = RuleMetrics(cr.rule, evaluated, passing, pass_rate)
             if collect_samples and _needs_sample(pass_rate):
-                m.records_failed_sample, m.records_failed_ids = _collect_sample(
-                    flat_df, cr, row_id_col
-                )
+                if cr.is_global:
+                    m.records_failed_sample = _duplicate_sample(flat_df, cr)
+                else:
+                    to_sample.append(m)
+                    sampled.append(cr)
             metrics[i] = m
+        if sampled:
+            views.append((flat_df, sampled))
+    if views:
+        id_col = keep[0] if keep else None
+        for m, (sample, ids) in zip(to_sample, _collect_samples(views, id_col), strict=True):
+            m.records_failed_sample, m.records_failed_ids = sample, ids
 
     return [metrics[i] for i in range(len(rules))]
 

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gchq_data_quality_spark.functions.dedup import _splitmix64
+from gchq_data_quality_spark.sources.session import SessionCache
 
 _P = (1 << 61) - 1  # Mersenne prime modulus for the position family
 _MAGIC = b"GQBL"
@@ -233,32 +234,15 @@ def _probe_bloom(digest: str, payload) -> PyBloom:
     return bloom
 
 
-_BCAST_CACHE: dict[tuple[int, str], object] = {}
-_BCAST_CAP = 4
+_BCAST_CACHE = SessionCache(cap=4, release=lambda bcast: bcast.unpersist())
 
 
 def _bloom_broadcast(sc, digest: str, raw: bytes):
-    """Broadcast of the serialized word table, cached per (gateway, digest)
-    (ADVICE r5): a long-lived incremental-ingest session calling
-    bloom_prefilter per batch previously created a fresh broadcast every
-    call and never released it. Superseded entries are unpersisted on
-    eviction; entries from a dead gateway are dropped (nothing to release)."""
-    from gchq_data_quality_spark.functions.dedup import _gateway_token
-
-    key = (_gateway_token(), digest)
-    bcast = _BCAST_CACHE.get(key)
-    if bcast is None:
-        for stale in [k for k in _BCAST_CACHE if k[0] != key[0]]:
-            _BCAST_CACHE.pop(stale, None)
-        while len(_BCAST_CACHE) >= _BCAST_CAP:
-            _, old = _BCAST_CACHE.popitem()
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        bcast = sc.broadcast(raw)
-        _BCAST_CACHE[key] = bcast
-    return bcast
+    """Broadcast of the serialized word table, one per (application,
+    digest): a long-lived incremental-ingest session calling bloom_prefilter
+    per batch would otherwise create a fresh broadcast every call and never
+    release it. Evicted broadcasts are unpersisted."""
+    return _BCAST_CACHE.get(sc, digest, lambda: sc.broadcast(raw))
 
 
 def bloom_prefilter(

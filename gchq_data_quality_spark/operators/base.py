@@ -65,9 +65,6 @@ class CompiledRule:
     def passing_filled(self) -> Column:
         return self.evaluated & F.coalesce(self.passing, F.lit(False))
 
-    def failing(self) -> Column:
-        return self.evaluated & ~F.coalesce(self.passing, F.lit(False))
-
 
 class BaseRule(DataQualityBaseModel, ABC):
     """Abstract declarative rule. Subclasses define coercion + passing logic."""

@@ -8,8 +8,43 @@ partitions to the core count rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import SparkSession
+
+
+class SessionCache:
+    """Bounded cache of objects that live and die with one Spark application,
+    such as broadcasts.
+
+    Entries are keyed on ``sc.applicationId`` as well as the caller's key: a
+    restarted SparkContext reuses the py4j gateway but none of the old
+    application's objects, so a miss first drops every other application's
+    entries (nothing is left to release). A hit makes its entry the newest;
+    once ``cap`` entries are held, the least recently used one is evicted and
+    handed to ``release``.
+    """
+
+    def __init__(self, cap: int, release: Callable[[object], None]):
+        self.cap = cap
+        self.release = release
+        self.entries: dict[tuple[str, Hashable], object] = {}
+
+    def get(self, sc, key: Hashable, make: Callable[[], object]):
+        full = (sc.applicationId, key)
+        if full in self.entries:
+            value = self.entries[full] = self.entries.pop(full)
+            return value
+        for stale in [k for k in self.entries if k[0] != full[0]]:
+            del self.entries[stale]
+        while len(self.entries) >= self.cap:
+            old = self.entries.pop(next(iter(self.entries)))
+            try:
+                self.release(old)
+            except Exception:
+                pass
+        value = self.entries[full] = make()
+        return value
 
 
 def engine_conf() -> dict[str, str]:

@@ -140,14 +140,64 @@ def test_optimal_params_shape():
 
 
 def test_bloom_prefilter_broadcast_reused_per_digest(spark):
-    """ADVICE r5: repeated prefilters with the same bloom must reuse ONE
-    broadcast (keyed per gateway+digest), not leak a fresh one per call."""
+    """Repeated prefilters with the same bloom must reuse ONE broadcast
+    (keyed per application+digest), not leak a fresh one per call."""
     from gchq_data_quality_spark.functions import bloom as bloom_mod
 
     df = spark.createDataFrame([(i,) for i in range(50)], "v long")
     bf = build_bloom(df, "v", expected_items=50, fpp=0.01)
-    bloom_mod._BCAST_CACHE.clear()
+    bloom_mod._BCAST_CACHE.entries.clear()
     a = bloom_prefilter(df, "v", bf)
     b = bloom_prefilter(df, "v", bf)
     assert a.count() == 50 and b.count() == 50
-    assert len(bloom_mod._BCAST_CACHE) == 1
+    assert len(bloom_mod._BCAST_CACHE.entries) == 1
+
+
+class _FakeBroadcast:
+    def __init__(self, value):
+        self.value = value
+        self.unpersisted = False
+
+    def unpersist(self):
+        self.unpersisted = True
+
+
+class _FakeContext:
+    """Just the SparkContext surface the broadcast cache touches."""
+
+    def __init__(self, app_id: str):
+        self.applicationId = app_id
+        self.made: list[_FakeBroadcast] = []
+
+    def broadcast(self, value):
+        self.made.append(_FakeBroadcast(value))
+        return self.made[-1]
+
+
+def test_bloom_broadcast_cache_per_application_oldest_out(monkeypatch):
+    """A restarted SparkContext (same py4j gateway, new application id) gets
+    a fresh broadcast, and a full cache evicts and unpersists its least
+    recently used entry, not the newest."""
+    from gchq_data_quality_spark.functions import bloom as bloom_mod
+
+    cache = bloom_mod._BCAST_CACHE
+    monkeypatch.setattr(cache, "entries", {})
+    first = _FakeContext("app-1")
+    a = bloom_mod._bloom_broadcast(first, "d0", b"0")
+    assert bloom_mod._bloom_broadcast(first, "d0", b"0") is a
+
+    restarted = _FakeContext("app-2")
+    b = bloom_mod._bloom_broadcast(restarted, "d0", b"0")
+    assert b is not a and restarted.made == [b]
+    assert list(cache.entries) == [("app-2", "d0")]
+
+    for i in range(1, cache.cap):
+        bloom_mod._bloom_broadcast(restarted, f"d{i}", b"x")
+    assert bloom_mod._bloom_broadcast(restarted, "d0", b"0") is b  # d1 is now oldest
+    bloom_mod._bloom_broadcast(restarted, f"d{cache.cap}", b"x")
+    d1 = restarted.made[1]
+    assert d1.unpersisted
+    assert [x for x in restarted.made if x.unpersisted] == [d1]
+    assert ("app-2", "d1") not in cache.entries
+    assert ("app-2", "d0") in cache.entries
+    assert ("app-2", f"d{cache.cap}") in cache.entries

@@ -20,7 +20,7 @@ from gchq_data_quality_spark.plans.flatten import (
     validate_path,
 )
 
-from .conftest import load_cases
+from .conftest import case_ids, load_cases
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +91,7 @@ def _rows_multiset(df, columns):
 @pytest.mark.parametrize(
     "case",
     load_cases("flatten_spark"),
-    ids=lambda c: c["description"][:60],
+    ids=case_ids(load_cases("flatten_spark")),
 )
 def test_flatten_golden(spark, nested_df, case):
     flatten_cols = case["inputs"]["flatten_cols"]
@@ -165,7 +165,7 @@ def test_flatten_spark_reference_signature(spark):
 @pytest.mark.parametrize(
     "case",
     load_cases("create_spark_dataframe"),
-    ids=lambda c: c["description"][:60],
+    ids=case_ids(load_cases("create_spark_dataframe")),
 )
 def test_create_spark_dataframe_golden(spark, nested_df, case):
     """Reference golden cases for single-field extraction (tests/data/
